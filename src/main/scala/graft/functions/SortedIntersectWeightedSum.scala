@@ -26,8 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
  *
  * Contract: `aIds`/`bIds` sorted ascending, distinct, non-null
  * elements; `aWeights.length == aIds.length` (weight i belongs to id
- * i). The result equals the join-groupBy sum BY CONSTRUCTION (both are
- * Σ_{t ∈ A∩B} w(t) with integer weights) — spec-pinned in DedupSpec.
+ * i; a mismatch throws). The result equals the join-groupBy sum BY
+ * CONSTRUCTION (both are Σ_{t ∈ A∩B} w(t) with integer weights) —
+ * spec-pinned in DedupSpec.
  */
 case class SortedIntersectWeightedSum(
     first: Expression, second: Expression, third: Expression)
@@ -61,9 +62,14 @@ case class SortedIntersectWeightedSum(
 }
 
 object SortedIntersectWeightedSum {
-  /** Two-pointer merge sum; static so codegen calls it directly. */
+  /** Two-pointer merge sum; static so codegen calls it directly. The
+    * length check keeps a short weights array from being read out of
+    * bounds. */
   def sum(a: ArrayData, w: ArrayData, b: ArrayData): Long = {
     val na = a.numElements()
+    if (w.numElements() != na) throw new IllegalArgumentException(
+      s"graft_sorted_intersect_wsum: weights_a has ${w.numElements()} " +
+        s"elements but ids_a has $na (weight i belongs to id i)")
     val nb = b.numElements()
     var i = 0
     var j = 0

@@ -18,7 +18,9 @@ import org.apache.spark.sql.types.StructType
  *  - Silver writes use dynamic partition overwrite
  *    (`breweries_transform_silver_notebook.py:35`) so a daily re-run
  *    replaces only the touched `state=/country=` dirs — at 100 TB you
- *    never rewrite the whole table for one day's data.
+ *    never rewrite the whole table for one day's data. Each write runs
+ *    one task per partition directory on all cores ([[writeSilver]]),
+ *    so one hot `state` dir is as slow as its own rows.
  *  - [[readJsonl]] with an enforced schema skips Spark's
  *    schema-inference pre-pass (which reads the whole file once!) —
  *    mandatory at scale.
@@ -47,13 +49,26 @@ object Layers {
   }
 
   /** K3 — silver partitioned Parquet sink with dynamic partition
-    * overwrite. */
-  def writeSilver(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write
+    * overwrite. Rows are hash-clustered by `partitionCols` into
+    * `defaultParallelism` tasks first, so each partition directory is
+    * written by exactly one task and the tasks run on all cores. Files
+    * per write = distinct partition values touched (no small-file
+    * growth); one partition value is one task, the layout's skew limit.
+    * The count is explicit (a `REPARTITION_BY_NUM` exchange) because
+    * AQE coalesces a count-less `repartition(cols)` of a small frame
+    * back to one task. No partition columns: written as it is. */
+  def writeSilver(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions.col
+    val clustered =
+      if (partitionCols.isEmpty) df
+      else df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, partitionCols.map(col): _*)
+    clustered.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
+  }
 
   /** K4 — gold unpartitioned Parquet sink. */
   def writeGold(df: DataFrame, path: String): Unit =

@@ -477,9 +477,14 @@ object Dedup {
       }
     val useDict = nDocs.exists(_ <= dictVerifyMaxDocs)
     // gate-bounded id list: broadcast the prune key when its size is
-    // known small (checkpointed frames carry no stats — every join
-    // against candIds would otherwise plan sort-merge, exchanging the
-    // corpus-side rows on a key the plan never reuses)
+    // known small. A checkpointed frame keeps only its pre-checkpoint
+    // size ESTIMATE, not an exact count, so the planner cannot be
+    // trusted to pick broadcast; the counted gate decides instead. The
+    // hint takes effect on the two left_semi joins below (otherwise
+    // sort-merge, exchanging the corpus-side rows on a key the plan
+    // never reuses). On the dict branch's re-attach candIdsB is the
+    // preserved side of a left-outer join, which Spark never
+    // broadcasts, so the hint is ignored there.
     val candIdsB = if (nDocs.exists(_ <= dictVerifyMaxDocs))
       broadcast(candIds) else candIds
     val shingled = (if (!useDict) {
@@ -525,7 +530,8 @@ object Dedup {
         .select(col("sid"),
           coalesce(col("shset"), array().cast("array<long>")).as("shset"))
     }).localCheckpoint() // reused by both sides of the pair attach
-    // r21: the checkpointed shingle frame carries no size stats, so
+    // r21: the checkpointed shingle frame keeps only its
+    // pre-checkpoint size estimate, not an exact count, and un-hinted
     // both attach joins planned SORT-MERGE — two exchanges of the PAIR
     // frame (the big side: 125 k rows at the q244 regime) keyed on ids
     // whose partitioning nothing downstream reuses. Past the gate
@@ -1012,8 +1018,9 @@ object Dedup {
     var labels = undirected.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
       .localCheckpoint()
-    // r20: checkpointed frames carry no size stats, so without a hint
-    // every round's two label joins plan as sort-merge — ~6 exchanges
+    // r20: checkpointed frames keep only their pre-checkpoint size
+    // estimate, not an exact count, and without a hint every round's
+    // two label joins plan as sort-merge — ~6 exchanges
     // per round on a frame whose exact size we already know (the node
     // count is fixed for the whole run). Below the gate, an explicit
     // broadcast turns both joins into BHJs: one exchange per round

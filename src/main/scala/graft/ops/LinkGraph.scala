@@ -41,8 +41,9 @@ object LinkGraph {
     * [[graft.ops.Dedup.components]] rationale: a node-sized score or
     * label frame is ≤ ~100 MB of (long, double) rows at the cap, its
     * size is KNOWN exactly (counted once up front; it never grows
-    * during the run), and checkpointed frames carry no stats, so
-    * un-hinted every per-round join plans sort-merge and exchanges the
+    * during the run), and a checkpointed frame keeps only its
+    * pre-checkpoint size estimate, not that exact count, so un-hinted
+    * every per-round join plans sort-merge and exchanges the
     * EDGE frame each round on a key nothing downstream reuses. Past
     * the gate every join keeps the shuffle path — the 100 TB web
     * graph never broadcasts its rank vector. `var` only as a test
@@ -133,9 +134,10 @@ object LinkGraph {
       n: DataFrame, nRow: DataFrame, deg: DataFrame, edgesDeg: DataFrame,
       ranks: DataFrame, damping: Double, small: Boolean): DataFrame = {
     // r21: ranks/deg/contribs are NODE-sized frames whose count is
-    // known once up front, but as checkpoints they carry no stats —
-    // un-hinted, all three joins here plan sort-merge and every
-    // iteration exchanges the EDGE frame by src (the corpus-∝ side)
+    // known once up front, but as checkpoints they keep only their
+    // pre-checkpoint size estimate, not that exact count — un-hinted,
+    // all three joins here plan sort-merge and every iteration
+    // exchanges the EDGE frame by src (the corpus-∝ side)
     // plus ranks twice, for joins whose partitioning nothing reuses.
     // Under the gate the hints make each round: one map-side BHJ over
     // the edge checkpoint + one node-sized exchange (the dst

@@ -1037,6 +1037,27 @@ class DedupSpec extends AnyFunSuite {
     assert(r.getDouble(3) < r.getDouble(2))
   }
 
+  test("graft_sorted_intersect_wsum fails loud when weights and ids differ in length") {
+    import TestSpark.spark
+    import spark.implicits._
+    Seq((Seq(1L, 2L, 3L), Seq(10L, 20L, 30L), Seq(2L, 3L)),
+      (Seq(1L, 2L, 3L), Seq(10L), Seq(2L, 3L)))
+      .toDF("ids_a", "w_a", "ids_b").createOrReplaceTempView("wsum_in")
+    val ok = spark.sql(
+      "SELECT graft_sorted_intersect_wsum(ids_a, w_a, ids_b) FROM wsum_in " +
+        "WHERE size(w_a) = 3").as[Long].collect()
+    assert(ok.toSeq == Seq(50L))
+    // the short-weights row must throw, not read past the weights array
+    val err = intercept[Exception] {
+      spark.sql("SELECT graft_sorted_intersect_wsum(ids_a, w_a, ids_b) FROM wsum_in")
+        .collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+    assert(msgs.exists(_.contains("weights_a has 1 elements but ids_a has 3")),
+      s"unexpected error: $err")
+  }
+
   test("weightedJaccardPairs: kernel re-score == join-formulation reference on the corpus") {
     import TestSpark.spark
     import spark.implicits._

@@ -43,10 +43,49 @@ class LayersSpec extends AnyFunSuite {
     val dir = TestSpark.tmpDir("silver_dyn")
     val df = Seq((1, "A"), (2, "B")).toDF("id", "part")
     Layers.writeSilver(df, dir, Seq("part"))
-    // overwrite ONLY partition B with a new row; partition A must survive
-    Layers.writeSilver(Seq((3, "B")).toDF("id", "part"), dir, Seq("part"))
+    // overwrite partition B and add C and D in one write; A must survive
+    Layers.writeSilver(Seq((3, "B"), (4, "C"), (5, "C"), (6, "D")).toDF("id", "part"),
+      dir, Seq("part"))
     val back = Layers.readParquet(spark, dir).as[(Int, String)].collect().toSet
-    assert(back == Set((1, "A"), (3, "B")))
+    assert(back == Set((1, "A"), (3, "B"), (4, "C"), (5, "C"), (6, "D")))
+  }
+
+  test("K3: silver write is one file per partition dir, written by more than one task") {
+    val dir = TestSpark.tmpDir("silver_cluster")
+    // one input partition: without clustering the write is one task
+    val df = spark.range(0, 4000, 1, 1).select(
+      col("id"),
+      concat(lit("s"), (col("id") % 8).cast("string")).as("state"),
+      concat(lit("c"), (col("id") % 3).cast("string")).as("country"))
+    val writers = scala.collection.mutable.Map.empty[Int, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writers.synchronized {
+            writers(e.stageId) = writers.getOrElse(e.stageId, 0) + 1
+          }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Layers.writeSilver(df, dir, Seq("state", "country"))
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 10000000000L
+      while (writers.synchronized(writers.values.forall(_ < 2)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(writers.synchronized(writers.values.max) > 1,
+      s"the write stage ran its output on one task: $writers")
+    val leaves = new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(_.isDirectory))
+    assert(leaves.length == 24, "8 states × 3 countries, all co-occurring")
+    leaves.foreach { d =>
+      val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"$d holds ${files.length} data files")
+    }
+    val back = Layers.readParquet(spark, dir)
+      .select("id", "state", "country").as[(Long, String, String)].collect()
+    assert(back.sorted.toSeq ==
+      df.as[(Long, String, String)].collect().sorted.toSeq)
   }
 
   test("K4/S5: plain gold parquet roundtrip") {
