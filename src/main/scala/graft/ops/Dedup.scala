@@ -399,12 +399,20 @@ object Dedup {
     * the shuffle path. */
   private[graft] val componentsBroadcastMaxNodes = 4_000_000L
 
-  /** Edge-count gate for [[components]]' driver union-find fast path:
-    * ~32 MB of long pairs at the cap — the bounded-driver-value
-    * contract (beam state / centroid matrices). `var` only as a test
-    * seam (DedupSpec forces the loop path on a hand fixture to pin
-    * fast-path ≡ loop); production code never writes it. */
-  private[graft] var componentsDriverMaxEdges = 2_000_000L
+  /** Edge-count gate for the driver fast paths: [[components]]'
+    * union-find and the PageRank family's in-process iterations
+    * ([[LinkGraph.pageRank]] and kin, which also take at most this
+    * many distinct node ids). Under it a graph is a bounded driver
+    * value, the contract of beam state / centroid matrices. Driver
+    * memory: union-find holds ~32 MB of long pairs at the cap;
+    * PageRank keeps 8 B per edge and ~50 B per node while iterating,
+    * holds ~40 B per edge while collecting, and returns a local
+    * relation of ~110 B per node (2M edges, 667k nodes, local mode:
+    * 26 MB retained after the collect, a 72 MB result, beside the
+    * 161 MB edge checkpoint both paths take). `var` only as a test
+    * seam (DedupSpec and LinkGraphSpec force the distributed paths to
+    * pin fast path ≡ distributed); production code never writes it. */
+  private[graft] var driverMaxEdges = 2_000_000L
 
   /** Verified-pair floor for [[weightedJaccardPairs]]' kernel
     * re-score: below it the join-form intermediate (pairs × tokens
@@ -982,7 +990,7 @@ object Dedup {
       // re-reads these blocks, so an over-gate graph no longer pays a
       // discarded checkpoint (r21, ADVICE).
       val edgesCk = edges.localCheckpoint()
-      if (edgesCk.count() <= componentsDriverMaxEdges) {
+      if (edgesCk.count() <= driverMaxEdges) {
         val parent = collection.mutable.LongMap.empty[Long]
         def find(x: Long): Long = {
           var r = x

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /**
  * Web-graph analytics over an extracted link table — the ranking side
@@ -13,31 +14,27 @@ import org.apache.spark.sql.functions._
  * processing — north-star surface.)
  *
  * Scale shape: PageRank (Page et al. 1999, public) is the textbook
- * iterate-joins algorithm —
+ * iterate-joins algorithm. The PageRank family ([[pageRank]]/
+ * [[pageRankResidual]]/[[personalizedPageRank]]) runs it on one of two
+ * paths, chosen by a counted edge gate shared with
+ * [[Dedup.components]] ([[Dedup.driverMaxEdges]]):
  *
- *  - the edge table is the big, IMMUTABLE side: out-degrees are
- *    attached once and the (src, dst, outdeg) frame is
- *    `localCheckpoint`ed, so each iteration re-reads a materialized
- *    edge partition set instead of re-running the degree aggregation
- *    (on a cluster, bucket the edge table by `src` so the per-iteration
- *    rank⋈edge join co-locates without reshuffling the edges);
- *  - each iteration is: rank ⋈ edges on src (shuffles only the
- *    node-sized rank frame), a decomposable `sum` of contributions
- *    keyed by dst, and a node-sized left join back onto the node set —
- *    nothing driver-sided, no windows, no global sorts;
- *  - dangling mass (nodes with no out-links) is folded in
- *    DECLARATIVELY: a one-row aggregate cross-joined into the update
- *    projection, so an iteration stays one job and the driver never
- *    collects a rank;
- *  - `localCheckpoint` per iteration keeps lineage O(1) (the q118 BPE
- *    discipline) — iteration count is the only sequential dimension,
- *    inherent to the power method.
+ *  - under the gate the graph is a bounded driver value, collected
+ *    once into primitive arrays; every iteration runs in-process, so
+ *    the job count does not grow with `iters` ([[driverGraph]]);
+ *  - past it nothing is collected: the edge frame is checkpointed
+ *    once and each iteration is a node-sized join/aggregate round,
+ *    `localCheckpoint`ed to keep lineage O(1) — iteration count is
+ *    the only sequential dimension, inherent to the power method
+ *    ([[distributedIterates]]).
+ *
+ * Both paths apply the same update, term for term; only the order in
+ * which contributions are summed differs (scores agree to ~1e-15).
  */
 object LinkGraph {
 
-  /** Node-count gate for the per-iteration broadcast hints in the
-    * iterate-joins loops below ([[pageRank]]/[[personalizedPageRank]]/
-    * [[hits]]/[[labelPropagation]]) — the
+  /** Node-count gate for the per-round broadcast hints in [[hits]],
+    * [[labelPropagation]], [[kCore]] and [[seedDistance]] — the
     * [[graft.ops.Dedup.components]] rationale: a node-sized score or
     * label frame is ≤ ~100 MB of (long, double) rows at the cap, its
     * size is KNOWN exactly (counted once up front; it never grows
@@ -46,7 +43,7 @@ object LinkGraph {
     * every per-round join plans sort-merge and exchanges the
     * EDGE frame each round on a key nothing downstream reuses. Past
     * the gate every join keeps the shuffle path — the 100 TB web
-    * graph never broadcasts its rank vector. `var` only as a test
+    * graph never broadcasts its score vector. `var` only as a test
     * seam (LinkGraphSpec forces the shuffle path to pin hinted ≡
     * un-hinted); production code never writes it. */
   private[graft] var broadcastMaxNodes = 4_000_000L
@@ -85,10 +82,14 @@ object LinkGraph {
    * `distinct` the edges first for the other contract).
    *
    * @param nodes one column `id` — every rankable node (isolated nodes
-   *              included; they hold (1-d)/n + the dangling share)
-   * @param edges columns `src`, `dst`; rows whose endpoints are not in
-   *              `nodes` still contribute mass to `dst` (caller
-   *              restricts first if the graph must be closed)
+   *              included; they hold (1-d)/n + the dangling share). A
+   *              null id is one node: it counts in n, holds rank and is
+   *              always dangling, but no edge reaches it
+   * @param edges columns `src`, `dst`; an edge counts in its `src`'s
+   *              out-degree even when `dst` is null or not in `nodes`
+   *              (that share of mass is lost); an edge from a `src` not
+   *              in `nodes` carries no rank (caller restricts first if
+   *              the graph must be closed)
    */
   def pageRank(
       nodes: DataFrame,
@@ -97,72 +98,7 @@ object LinkGraph {
       damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val n = nodes.select(col("id")).distinct().localCheckpoint()
-    // node count enters as a one-row frame, not a driver scalar — the
-    // whole build stays declarative (q84's corpus-size discipline)
-    val nRow = n.agg(count(lit(1)).cast("double").as("__n")).localCheckpoint()
-
-    // deg is node-sized and read EVERY iteration (the dangling scan) +
-    // once for edgesDeg — un-checkpointed it re-ran the edge groupBy
-    // per round (one corpus-∝ scan+shuffle each, r21)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))
-      .localCheckpoint()
-    val edgesDeg = edges.select(col("src"), col("dst"))
-      .join(deg, "src")
-      .localCheckpoint() // the immutable per-iteration input
-
-    var ranks = n.crossJoin(nRow)
-      .select(col("id"), (lit(1.0) / col("__n")).as("pr"))
-      .localCheckpoint()
-
-    val small = n.count() <= broadcastMaxNodes
-    var it = 0
-    while (it < iters) {
-      ranks = prStep(n, nRow, deg, edgesDeg, ranks, damping, small)
-        .localCheckpoint()
-      it += 1
-    }
-    ranks
-  }
-
-  /** One power-method step (UN-materialized — callers checkpoint):
-    * contributions + dangling mass + teleport. Shared by [[pageRank]]
-    * and [[pageRankResidual]]; `private[graft]` so the plan probe can
-    * explain a real step. `small` gates the broadcast hints below
-    * (see [[broadcastMaxNodes]]). */
-  private[graft] def prStep(
-      n: DataFrame, nRow: DataFrame, deg: DataFrame, edgesDeg: DataFrame,
-      ranks: DataFrame, damping: Double, small: Boolean): DataFrame = {
-    // r21: ranks/deg/contribs are NODE-sized frames whose count is
-    // known once up front, but as checkpoints they keep only their
-    // pre-checkpoint size estimate, not that exact count — un-hinted,
-    // all three joins here plan sort-merge and every iteration
-    // exchanges the EDGE frame by src (the corpus-∝ side)
-    // plus ranks twice, for joins whose partitioning nothing reuses.
-    // Under the gate the hints make each round: one map-side BHJ over
-    // the edge checkpoint + one node-sized exchange (the dst
-    // aggregation) — the components() broadcast-when-stats-lie
-    // pattern (guide §3.1). Past the gate everything keeps the
-    // shuffle path.
-    val ranksB = if (small) broadcast(ranks) else ranks
-    val degB = if (small) broadcast(deg) else deg
-    val contribs = ranksB
-      .join(edgesDeg, ranksB("id") === edgesDeg("src"))
-      .groupBy(col("dst").as("id"))
-      .agg(sum(col("pr") / col("__outdeg")).as("__in"))
-    // dangling mass: rank sitting on nodes with no out-edges
-    val dangling = ranks
-      .join(degB, ranks("id") === degB("src"), "left_anti")
-      .agg(coalesce(sum(col("pr")), lit(0.0)).as("__dm"))
-    n
-      .join(if (small) broadcast(contribs) else contribs,
-        Seq("id"), "left_outer")
-      .crossJoin(dangling)
-      .crossJoin(nRow)
-      .select(col("id"),
-        (lit(1.0 - damping) / col("__n") +
-          lit(damping) * (coalesce(col("__in"), lit(0.0)) +
-            col("__dm") / col("__n"))).as("pr"))
+    iterates(nodes, edges, None, iters, damping)._2
   }
 
   /**
@@ -171,7 +107,8 @@ object LinkGraph {
    * criterion): the ops gauge that decides whether `iters` was enough
    * BEFORE the ranks feed crawl scheduling or quality priors. Tracks
    * the previous iterate inside ONE loop (no second run of the power
-   * method); the diff is a node-keyed join + 1-row aggregation.
+   * method); the diff is a node-keyed join (a null id drops out) +
+   * 1-row aggregation.
    *
    * Output: one row (iters, n_nodes, l1_residual, max_delta) —
    * residual halves roughly per iteration at d = 0.85 on a well-mixed
@@ -185,28 +122,9 @@ object LinkGraph {
       damping: Double = 0.85): DataFrame = {
     require(iters >= 2, "a residual needs at least two iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val n = nodes.select(col("id")).distinct().localCheckpoint()
-    val nRow = n.agg(count(lit(1)).cast("double").as("__n")).localCheckpoint()
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))
-      .localCheckpoint() // read every iteration — see pageRank
-    val edgesDeg = edges.select(col("src"), col("dst"))
-      .join(deg, "src")
-      .localCheckpoint()
-    var ranks = n.crossJoin(nRow)
-      .select(col("id"), (lit(1.0) / col("__n")).as("pr"))
-      .localCheckpoint()
-    val small = n.count() <= broadcastMaxNodes
-    var prev = ranks
-    var it = 0
-    while (it < iters) {
-      prev = ranks
-      ranks = prStep(n, nRow, deg, edgesDeg, ranks, damping, small)
-        .localCheckpoint()
-      it += 1
-    }
+    val (prev, ranks) = iterates(nodes, edges, None, iters, damping)
     ranks
-      .join(if (small) broadcast(prev.withColumnRenamed("pr", "__prev"))
-        else prev.withColumnRenamed("pr", "__prev"), "id")
+      .join(prev().withColumnRenamed("pr", "__prev"), "id")
       .agg(count(lit(1)).as("n_nodes"),
         round(sum(abs(col("pr") - col("__prev"))), 6).as("l1_residual"),
         round(max(abs(col("pr") - col("__prev"))), 9).as("max_delta"))
@@ -218,9 +136,9 @@ object LinkGraph {
    * Personalized PageRank (random walk with restart): teleport lands
    * only on the `seeds` set, so rank measures proximity TO the seeds —
    * the standard graph-expansion primitive for corpus curation
-   * ("pages like these known-good ones"). Same declarative shape as
-   * [[pageRank]]; teleport vector `t = isSeed/|S|` attaches to the
-   * node frame once, init = t, update
+   * ("pages like these known-good ones"). Same paths and edge
+   * semantics as [[pageRank]]; teleport vector `t = isSeed/|S|`
+   * attaches to the node frame once, init = t, update
    * `pr' = (1-d)·t + d·(Σ_in pr/outdeg + danglingMass·t)`.
    * Seeds not present in `nodes` are ignored (their teleport share is
    * still counted in |S| — feed a consistent seed set).
@@ -233,49 +151,248 @@ object LinkGraph {
       damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "personalizedPageRank needs at least one iteration")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val sd = seeds.select(col("id")).distinct().localCheckpoint()
-    val sRow = sd.agg(count(lit(1)).cast("double").as("__s")).localCheckpoint()
-    val n = nodes.select(col("id")).distinct()
-      .join(sd.withColumn("__isSeed", lit(1)), Seq("id"), "left_outer")
-      .crossJoin(sRow)
-      .select(col("id"),
-        when(col("__isSeed").isNotNull, lit(1.0) / col("__s"))
-          .otherwise(lit(0.0)).as("__t"))
-      .localCheckpoint()
+    iterates(nodes, edges, Some(seeds.select(col("id"))), iters, damping)._2
+  }
 
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))
-      .localCheckpoint() // read every iteration — see pageRank
-    val edgesDeg = edges.select(col("src"), col("dst"))
-      .join(deg, "src")
-      .localCheckpoint()
+  /** The PageRank family's last two iterates, (previous, last), on the
+    * driver path when [[driverGraph]] collects the graph (and, for
+    * `seeds`, the seed ids under the same cap), else on the
+    * distributed path. `seeds` selects the personalized update. */
+  private def iterates(nodes: DataFrame, edges: DataFrame,
+      seeds: Option[DataFrame], iters: Int,
+      damping: Double): (() => DataFrame, DataFrame) = {
+    val (e, graph) = driverGraph(nodes, edges)
+    val local = seeds match {
+      case None => graph.map(_ -> (null: Array[Double]))
+      case Some(sd) =>
+        for {
+          g <- graph if sd.schema.head.dataType == LongType
+          (seedIds, seedNull) <- distinctIds(sd, Dedup.driverMaxEdges)
+        } yield {
+          val s = (seedIds.length + (if (seedNull) 1 else 0)).toDouble
+          g -> Array.tabulate(g.size)(i => if (i < g.ids.length &&
+            java.util.Arrays.binarySearch(seedIds, g.ids(i)) >= 0) 1.0 / s else 0.0)
+        }
+    }
+    local match {
+      case Some((g, tele)) =>
+        val (prev, last) = powerIterate(g, tele, iters, damping)
+        (() => rankRelation(nodes, g, prev), rankRelation(nodes, g, last))
+      case None =>
+        val ids = nodes.select(col("id")).distinct().localCheckpoint()
+        seeds match {
+          case None =>
+            // node count enters as a one-row frame, not a driver scalar
+            // — the whole build stays declarative (q84's discipline)
+            val n = ids.crossJoin(ids.agg(count(lit(1)).cast("double").as("__n")))
+            distributedIterates(n, e, lit(1.0) / col("__n"), iters, (in, dm) =>
+              lit(1.0 - damping) / col("__n") + lit(damping) * (in + dm / col("__n")))
+          case Some(sd) =>
+            val sdd = sd.distinct().localCheckpoint()
+            val n = ids
+              .join(sdd.withColumn("__isSeed", lit(1)), Seq("id"), "left_outer")
+              .crossJoin(sdd.agg(count(lit(1)).cast("double").as("__s")))
+              .select(col("id"),
+                when(col("__isSeed").isNotNull, lit(1.0) / col("__s"))
+                  .otherwise(lit(0.0)).as("__t"))
+            distributedIterates(n, e, col("__t"), iters, (in, dm) =>
+              lit(1.0 - damping) * col("__t") + lit(damping) * (in + dm * col("__t")))
+        }
+    }
+  }
 
-    var ranks = n.select(col("id"), col("__t"), col("__t").as("pr"))
+  /** The distributed power iterations over node frame `n` (`id` plus
+    * the columns `init`/`update` read): out-degrees and the (src, dst,
+    * outdeg) edge frame are checkpointed once — `deg` is read every
+    * round by the dangling scan, so it is never re-aggregated (r21) —
+    * then each round is rank ⋈ edges, a dst-keyed sum, the one-row
+    * dangling mass and `update(in, dm)`, checkpointed. */
+  private def distributedIterates(n: DataFrame, e: DataFrame, init: Column,
+      iters: Int, update: (Column, Column) => Column): (() => DataFrame, DataFrame) = {
+    val nodes = n.localCheckpoint()
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))
       .localCheckpoint()
-    // gated per-round broadcast hints — see broadcastMaxNodes/prStep
-    val small = n.count() <= broadcastMaxNodes
+    val edgesDeg = e.join(deg, "src").localCheckpoint()
+    var ranks = nodes.select(col("id"), init.as("pr")).localCheckpoint()
+    var prev = ranks
     var it = 0
     while (it < iters) {
-      val ranksB = if (small) broadcast(ranks) else ranks
-      val degB = if (small) broadcast(deg) else deg
-      val contribs = ranksB
-        .join(edgesDeg, ranksB("id") === edgesDeg("src"))
+      val contribs = ranks
+        .join(edgesDeg, ranks("id") === edgesDeg("src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("pr") / col("__outdeg")).as("__in"))
       val dangling = ranks
-        .join(degB, ranks("id") === degB("src"), "left_anti")
+        .join(deg, ranks("id") === deg("src"), "left_anti")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("__dm"))
-      ranks = n
-        .join(if (small) broadcast(contribs) else contribs,
-          Seq("id"), "left_outer")
+      prev = ranks
+      ranks = nodes
+        .join(contribs, Seq("id"), "left_outer")
         .crossJoin(dangling)
-        .select(col("id"), col("__t"),
-          (lit(1.0 - damping) * col("__t") +
-            lit(damping) * (coalesce(col("__in"), lit(0.0)) +
-              col("__dm") * col("__t"))).as("pr"))
+        .select(col("id"),
+          update(coalesce(col("__in"), lit(0.0)), col("__dm")).as("pr"))
         .localCheckpoint()
       it += 1
     }
-    ranks.select(col("id"), col("pr"))
+    val last2 = prev
+    (() => last2, ranks)
+  }
+
+  /** The graph of a driver-path run: node ids sorted (index =
+    * position; a null node id becomes one more node, at index
+    * `ids.length`, with no edges), each node's out-degree, and the
+    * edges whose two endpoints are both nodes as index pairs. */
+  private final case class LocalGraph(ids: Array[Long], hasNull: Boolean,
+      outdeg: Array[Int], src: Array[Int], dst: Array[Int]) {
+    def size: Int = outdeg.length
+  }
+
+  /** The PageRank family's path choice. Returns the (src, dst) edge
+    * frame for the distributed path — the counted checkpoint when one
+    * was taken, so a graph past the gate reads it instead of paying a
+    * discarded one — and the collected graph when the driver path
+    * applies: Long `id`/`src`/`dst`, at most [[Dedup.driverMaxEdges]]
+    * edges (the count of the checkpoint is the gate) and at most as
+    * many node ids (see [[distinctIds]]). Partitions are collected in
+    * order, so the edge order — and every sum over it — is the same
+    * on every run.
+    *
+    * Edge semantics are the distributed joins', one for one: a null
+    * `src` matches no rank and no node, so the edge is dropped; any
+    * other edge counts in its `src`'s out-degree, and carries rank
+    * only when both endpoints are nodes. */
+  private def driverGraph(nodes: DataFrame, edges: DataFrame)
+      : (DataFrame, Option[LocalGraph]) = {
+    val e = edges.select(col("src"), col("dst"))
+    if (!(nodes.select(col("id")).schema ++ e.schema).forall(_.dataType == LongType))
+      return (e, None)
+    val cap = Dedup.driverMaxEdges
+    val eCk = e.localCheckpoint()
+    val nEdges = eCk.count()
+    if (nEdges > cap) return (eCk, None)
+    val (ids, hasNull) = distinctIds(nodes.select(col("id")), cap)
+      .getOrElse(return (eCk, None))
+    val parts = eCk.queryExecution.toRdd.mapPartitions { rows =>
+      val s = Array.newBuilder[Long]
+      val d = Array.newBuilder[Long]
+      val sNullDst = Array.newBuilder[Long]
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          if (r.isNullAt(1)) sNullDst += r.getLong(0)
+          else { s += r.getLong(0); d += r.getLong(1) }
+        }
+      }
+      Iterator.single((s.result(), d.result(), sNullDst.result()))
+    }.collect()
+    val outdeg = new Array[Int](ids.length + (if (hasNull) 1 else 0))
+    val src = new Array[Int](nEdges.toInt)
+    val dst = new Array[Int](nEdges.toInt)
+    var m = 0
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    parts.foreach { case (s, d, sNullDst) =>
+      var j = 0
+      while (j < s.length) {
+        val si = index(s(j))
+        if (si >= 0) {
+          outdeg(si) += 1
+          val di = index(d(j))
+          if (di >= 0) { src(m) = si; dst(m) = di; m += 1 }
+        }
+        j += 1
+      }
+      sNullDst.foreach { x => val si = index(x); if (si >= 0) outdeg(si) += 1 }
+    }
+    (eCk, Some(LocalGraph(ids, hasNull, outdeg,
+      java.util.Arrays.copyOf(src, m), java.util.Arrays.copyOf(dst, m))))
+  }
+
+  /** The distinct non-null values of a one-column LongType frame,
+    * sorted, and whether it holds a null — or None past `cap`. Each
+    * task dedups its partition and stops after cap + 1 ids; the driver
+    * keeps arrivals only while their running total stays within the
+    * cap, so neither side ever holds more than that. The total
+    * over-counts ids repeated across partitions, which can only send a
+    * graph to the distributed path, never let one past the cap. */
+  private def distinctIds(df: DataFrame, cap: Long): Option[(Array[Long], Boolean)] = {
+    val perTask = df.queryExecution.toRdd.mapPartitions { rows =>
+      val seen = collection.mutable.LongMap.empty[Unit]
+      var nul = false
+      while (rows.hasNext && seen.size <= cap) {
+        val r = rows.next()
+        if (r.isNullAt(0)) nul = true else seen(r.getLong(0)) = ()
+      }
+      Iterator.single((seen.keysIterator.toArray, nul))
+    }
+    val kept = collection.mutable.ArrayBuffer.empty[Array[Long]]
+    var total = 0L
+    var hasNull = false
+    df.sparkSession.sparkContext.runJob(perTask,
+      (it: Iterator[(Array[Long], Boolean)]) => it.next(),
+      (_: Int, r: (Array[Long], Boolean)) => {
+        total += r._1.length
+        hasNull ||= r._2
+        if (total <= cap) kept += r._1 else kept.clear()
+      })
+    if (total > cap) return None
+    val all = kept.toArray.flatten
+    java.util.Arrays.sort(all)
+    var k = 0 // in-place unique over the sorted ids
+    all.indices.foreach { i =>
+      if (i == 0 || all(i) != all(i - 1)) { all(k) = all(i); k += 1 }
+    }
+    Some((java.util.Arrays.copyOf(all, k), hasNull))
+  }
+
+  /** `iters` power-method steps over `g`, run in-process; returns the
+    * last two iterates (the initial vector stands in for the previous
+    * one after a single step). Each step is the distributed step's
+    * arithmetic term for term: per-edge contributions `pr/outdeg`
+    * summed by dst, the dangling mass summed over nodes with no
+    * out-edges (the null node always among them), then
+    * `(1-d)/n + d·(in + dm/n)` from init 1/n — or, given a teleport
+    * vector `tele` ([[personalizedPageRank]]), `(1-d)·t + d·(in + dm·t)`
+    * from init `t`. */
+  private def powerIterate(g: LocalGraph, tele: Array[Double], iters: Int,
+      damping: Double): (Array[Double], Array[Double]) = {
+    val size = g.size
+    val nD = size.toDouble
+    var r = if (tele == null) Array.fill(size)(1.0 / nD) else tele
+    var prev = r
+    val contrib = new Array[Double](size)
+    val in = new Array[Double](size)
+    var it = 0
+    while (it < iters) {
+      var dm = 0.0
+      var i = 0
+      while (i < size) {
+        if (g.outdeg(i) == 0) dm += r(i) else contrib(i) = r(i) / g.outdeg(i)
+        i += 1
+      }
+      java.util.Arrays.fill(in, 0.0)
+      var j = 0
+      while (j < g.src.length) { in(g.dst(j)) += contrib(g.src(j)); j += 1 }
+      val next = new Array[Double](size)
+      i = 0
+      while (i < size) {
+        next(i) =
+          if (tele == null) (1.0 - damping) / nD + damping * (in(i) + dm / nD)
+          else (1.0 - damping) * tele(i) + damping * (in(i) + dm * tele(i))
+        i += 1
+      }
+      prev = r
+      r = next
+      it += 1
+    }
+    (prev, r)
+  }
+
+  /** One (id, pr) row per node of `g` as a local relation. */
+  private def rankRelation(nodes: DataFrame, g: LocalGraph,
+      pr: Array[Double]): DataFrame = {
+    val rows = new java.util.ArrayList[Row](g.size)
+    g.ids.indices.foreach(i => rows.add(Row(g.ids(i), pr(i))))
+    if (g.hasNull) rows.add(Row(null, pr(g.ids.length)))
+    nodes.sparkSession.createDataFrame(rows, StructType(Seq(
+      StructField("id", LongType), StructField("pr", DoubleType))))
   }
 
   /**
@@ -303,7 +420,7 @@ object LinkGraph {
 
     var hubs = n.select(col("id"), lit(1.0).as("hub")).localCheckpoint()
     var auths = n.select(col("id"), lit(1.0).as("auth"))
-    // gated per-round broadcast hints — see broadcastMaxNodes/prStep
+    // gated per-round broadcast hints — see broadcastMaxNodes
     val small = n.count() <= broadcastMaxNodes
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     var it = 0
@@ -373,7 +490,7 @@ object LinkGraph {
     val n = nodes.select(col("id")).distinct().localCheckpoint()
 
     var labels = n.select(col("id"), col("id").as("label")).localCheckpoint()
-    // gated per-round broadcast hint — see broadcastMaxNodes/prStep
+    // gated per-round broadcast hint — see broadcastMaxNodes
     // (labels are node-sized (long, long) rows; un-hinted the vote
     // join exchanges the ADJACENCY by nbr every round)
     val small = n.count() <= broadcastMaxNodes
@@ -583,7 +700,7 @@ object LinkGraph {
       .localCheckpoint()
 
     var dist = n
-    // gated per-hop broadcast hints — see broadcastMaxNodes/prStep
+    // gated per-hop broadcast hints — see broadcastMaxNodes
     // (dist is node-sized and checkpointed per hop: no stats, so both
     // joins planned sort-merge, exchanging the EDGE frame every hop;
     // min() over integer hops is order-free, labels exact)
@@ -805,7 +922,7 @@ object LinkGraph {
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
       .distinct()
       .localCheckpoint()
-    // gated per-round broadcast hints — see broadcastMaxNodes/prStep:
+    // gated per-round broadcast hints — see broadcastMaxNodes:
     // `keep` is node-sized (≤ 2·edges survivors, and peeling only
     // shrinks), but un-hinted both semi joins planned sort-merge,
     // exchanging the EDGE frame twice per round; semi-join semantics

@@ -289,9 +289,9 @@ class DedupSpec extends AnyFunSuite {
     val chain = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     // the maxIter semantics belong to the DISTRIBUTED loop — force it
     // (the r20 driver fast path always converges fully)
-    val saved = Dedup.componentsDriverMaxEdges
+    val saved = Dedup.driverMaxEdges
     try {
-      Dedup.componentsDriverMaxEdges = 0L
+      Dedup.driverMaxEdges = 0L
       // maxIter too small to converge: strict throws, lenient degrades
       intercept[IllegalStateException](
         Dedup.components(chain, maxIter = 2, strict = true).collect())
@@ -300,7 +300,7 @@ class DedupSpec extends AnyFunSuite {
       assert(best.size == 65)
       // labels only ever decrease toward the component min
       assert(best.forall { case (id, label) => label <= id })
-    } finally Dedup.componentsDriverMaxEdges = saved
+    } finally Dedup.driverMaxEdges = saved
   }
 
   test("components: driver fast path == distributed loop (chains, cliques, shared hubs)") {
@@ -312,12 +312,12 @@ class DedupSpec extends AnyFunSuite {
         (200L, 205L), (205L, 203L), (203L, 201L),
         (300L, 301L))).toDF("id_a", "id_b")
     val fast = Dedup.components(pairs).as[(Long, Long)].collect().toMap
-    val saved = Dedup.componentsDriverMaxEdges
+    val saved = Dedup.driverMaxEdges
     val loop =
       try {
-        Dedup.componentsDriverMaxEdges = 0L
+        Dedup.driverMaxEdges = 0L
         Dedup.components(pairs).as[(Long, Long)].collect().toMap
-      } finally Dedup.componentsDriverMaxEdges = saved
+      } finally Dedup.driverMaxEdges = saved
     assert(fast == loop, "fast path must equal the loop's fixpoint")
     assert(fast(205L) == 200L && fast(50L) == 0L && fast(103L) == 100L)
   }
@@ -326,18 +326,18 @@ class DedupSpec extends AnyFunSuite {
     // r21 contract fix: with strict = false and a maxIter the loop can
     // bind on, the caller is asking for possibly-PARTIAL labels — the
     // always-converged union-find must defer to the loop. The chain is
-    // well under componentsDriverMaxEdges, so only the maxIter guard
+    // well under driverMaxEdges, so only the maxIter guard
     // keeps the fast path out.
     val chain = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val gated = Dedup.components(chain, maxIter = 2, strict = false)
       .as[(Long, Long)].collect().toMap
-    val saved = Dedup.componentsDriverMaxEdges
+    val saved = Dedup.driverMaxEdges
     val loop =
       try {
-        Dedup.componentsDriverMaxEdges = 0L
+        Dedup.driverMaxEdges = 0L
         Dedup.components(chain, maxIter = 2, strict = false)
           .as[(Long, Long)].collect().toMap
-      } finally Dedup.componentsDriverMaxEdges = saved
+      } finally Dedup.driverMaxEdges = saved
     assert(gated == loop,
       "non-strict small-maxIter labels must be the loop's best effort")
     assert(gated.values.exists(_ != 0L),
@@ -362,12 +362,12 @@ class DedupSpec extends AnyFunSuite {
       (null.asInstanceOf[java.lang.Long], null.asInstanceOf[java.lang.Long]))
       .toDF("id_a", "id_b")
     val fast = Dedup.components(dirty).as[(Long, Long)].collect().toMap
-    val saved = Dedup.componentsDriverMaxEdges
+    val saved = Dedup.driverMaxEdges
     val loop =
       try {
-        Dedup.componentsDriverMaxEdges = 0L
+        Dedup.driverMaxEdges = 0L
         Dedup.components(dirty).as[(Long, Long)].collect().toMap
-      } finally Dedup.componentsDriverMaxEdges = saved
+      } finally Dedup.driverMaxEdges = saved
     assert(fast == Map(1L -> 1L, 2L -> 1L))
     assert(loop == fast, "both paths must agree on dirty input")
   }

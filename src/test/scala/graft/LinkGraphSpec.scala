@@ -414,7 +414,7 @@ class LinkGraphSpec extends AnyFunSuite {
       .head.isNullAt(2))
   }
 
-  test("iterate-joins broadcast gate: hinted == un-hinted (pageRank, hits, labelProp, ppr)") {
+  test("broadcast gate: hinted == un-hinted (hits, labelProp, kCore, seedDistance)") {
     import spark.implicits._
     // non-trivial graph: ring + chords + dangling node 49
     val nodes = (0L to 49L).toDF("id")
@@ -422,24 +422,20 @@ class LinkGraphSpec extends AnyFunSuite {
       Seq((i, (i + 1) % 49), (i, (i * 3 + 2) % 49))).toDF("src", "dst")
     val seeds = Seq(0L, 7L).toDF("id")
     def all() = (
-      LinkGraph.pageRank(nodes, edges, iters = 3)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet,
       LinkGraph.hits(nodes, edges, iters = 2)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSet,
       LinkGraph.labelPropagation(nodes, edges, "src", "dst", iters = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
-      LinkGraph.personalizedPageRank(nodes, edges, seeds, iters = 3)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet,
       LinkGraph.kCore(edges, "src", "dst", k = 3, rounds = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
       LinkGraph.seedDistance(nodes, edges, seeds, maxHops = 4)
         .collect().map(r => (r.getLong(0),
           if (r.isNullAt(1)) -1L else r.getLong(1))).toSet)
     val saved = LinkGraph.broadcastMaxNodes
-    val (hintedPr, hintedHits, hintedLp, hintedPpr, hintedKc, hintedSd) =
+    val (hintedHits, hintedLp, hintedKc, hintedSd) =
       try { LinkGraph.broadcastMaxNodes = 4_000_000L; all() }
       finally LinkGraph.broadcastMaxNodes = saved
-    val (loopPr, loopHits, loopLp, loopPpr, loopKc, loopSd) =
+    val (loopHits, loopLp, loopKc, loopSd) =
       try { LinkGraph.broadcastMaxNodes = 0L; all() }
       finally LinkGraph.broadcastMaxNodes = saved
     // labels/degrees/hops are integers (exact); the double scores
@@ -448,17 +444,102 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(hintedLp == loopLp)
     assert(hintedKc == loopKc)
     assert(hintedSd == loopSd)
-    def close(a: Set[(Long, Double)], b: Set[(Long, Double)]): Unit = {
-      val bm = b.toMap
-      a.foreach { case (k, v) =>
-        assert(math.abs(v - bm(k)) < 1e-12, s"node $k: $v vs ${bm(k)}") }
-    }
-    close(hintedPr, loopPr)
-    close(hintedPpr, loopPpr)
     val hitsB = loopHits.map(t => t._1 -> ((t._2, t._3))).toMap
     hintedHits.foreach { case (k, a1, h1) =>
       val (a2, h2) = hitsB(k)
       assert(math.abs(a1 - a2) < 1e-12 && math.abs(h1 - h2) < 1e-12)
     }
+  }
+
+  /** Runs `body` under the shared driver edge cap `cap`. */
+  private def underCap[T](cap: Long)(body: => T): T = {
+    val saved = graft.ops.Dedup.driverMaxEdges
+    try { graft.ops.Dedup.driverMaxEdges = cap; body }
+    finally graft.ops.Dedup.driverMaxEdges = saved
+  }
+
+  /** Whether `df` reads only local relations (the driver path). */
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves().forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+
+  test("PageRank family: driver path == distributed path on a dirty graph") {
+    import spark.implicits._
+    // ring + chords over 0..19; 19 is dangling; a null node id; seeds
+    // include one that is not a node and a null
+    val nodes = ((0L to 19L).map(Option(_)) :+ None).toDF("id")
+    val ring = (0L until 19L).flatMap(i =>
+      Seq((i, (i + 1) % 19), (i, (i * 3 + 2) % 19)))
+    val dirty = Seq(
+      (Option(1L), Option(2L)), (Option(1L), Option(2L)), // duplicates vote twice
+      (Option(4L), Option(99L)),  // dst not a node: its share is lost
+      (Option(77L), Option(3L)),  // src not a node: carries no rank
+      (None, Option(5L)),         // null src
+      (Option(6L), None))         // null dst: counts in 6's out-degree
+    val edges = (ring.map { case (a, b) => (Option(a), Option(b)) } ++ dirty)
+      .toDF("src", "dst")
+    val seeds = Seq(Option(0L), Option(7L), Option(55L), None).toDF("id")
+    def ranks(df: org.apache.spark.sql.DataFrame): Map[Option[Long], Double] =
+      df.collect().map(r =>
+        (if (r.isNullAt(0)) None else Some(r.getLong(0))) -> r.getDouble(1)).toMap
+    def runs() = {
+      val pr = LinkGraph.pageRank(nodes, edges, iters = 4)
+      val res = LinkGraph.pageRankResidual(nodes, edges, iters = 4)
+      val ppr = LinkGraph.personalizedPageRank(nodes, edges, seeds, iters = 4)
+      (Seq(pr, res, ppr).map(isLocal), ranks(pr), res.head, ranks(ppr))
+    }
+    val (dLocal, dPr, dRes, dPpr) = runs()
+    val (sLocal, sPr, sRes, sPpr) = underCap(0L)(runs())
+    assert(dLocal == Seq(true, true, true), "under the cap: local relations")
+    assert(sLocal == Seq(false, false, false), "cap 0: the distributed path")
+    def close(a: Map[Option[Long], Double], b: Map[Option[Long], Double]): Unit = {
+      assert(a.keySet == b.keySet)
+      assert(a.keySet.size == 21 && a.contains(None))
+      a.foreach { case (k, v) =>
+        assert(math.abs(v - b(k)) < 1e-12, s"node $k: $v vs ${b(k)}") }
+    }
+    close(dPr, sPr)
+    close(dPpr, sPpr)
+    // the residual joins on id: the null node is not in n_nodes
+    assert((dRes.getInt(0), dRes.getLong(1)) == ((4, 20L)))
+    assert((sRes.getInt(0), sRes.getLong(1)) == ((4, 20L)))
+    assert(math.abs(dRes.getDouble(2) - sRes.getDouble(2)) < 1e-12)
+    assert(math.abs(dRes.getDouble(3) - sRes.getDouble(3)) < 1e-12)
+    // mass leaves through 4→99 and 6→null: the ranks sum below 1
+    assert(dPr.values.sum < 1.0 - 1e-3)
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously, so a marked job run after `body` fences them. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.fence") != null)
+          fence.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.fence", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.fence", null)
+      assert(fence.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("PageRank driver path: the job count does not grow with iters") {
+    import spark.implicits._
+    val nodes = (0L to 49L).toDF("id")
+    val edges = (0L until 49L).flatMap(i =>
+      Seq((i, (i + 1) % 49), (i, (i * 3 + 2) % 49))).toDF("src", "dst")
+    val one = jobsDuring(LinkGraph.pageRank(nodes, edges, iters = 1).collect())
+    val ten = jobsDuring(LinkGraph.pageRank(nodes, edges, iters = 10).collect())
+    assert(one == ten, s"iters = 1 ran $one jobs, iters = 10 ran $ten")
   }
 }
