@@ -266,8 +266,10 @@ object LinkGraph {
     if (!(nodes.select(col("id")).schema ++ e.schema).forall(_.dataType == LongType))
       return (e, None)
     val cap = Dedup.driverMaxEdges
-    val eCk = e.localCheckpoint()
-    val nEdges = eCk.count()
+    // a lazy checkpoint whose first job is the count: one job pins and
+    // counts the edges (an eager checkpoint plus Dataset.count is three)
+    val eCk = e.localCheckpoint(eager = false)
+    val nEdges = eCk.queryExecution.toRdd.count()
     if (nEdges > cap) return (eCk, None)
     val (ids, hasNull) = distinctIds(nodes.select(col("id")), cap)
       .getOrElse(return (eCk, None))
