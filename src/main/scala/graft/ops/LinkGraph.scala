@@ -233,8 +233,8 @@ object LinkGraph {
         .localCheckpoint()
       it += 1
     }
-    val last2 = prev
-    (() => last2, ranks)
+    val previous = prev
+    (() => previous, ranks)
   }
 
   /** The graph of a driver-path run: node ids sorted (index =
